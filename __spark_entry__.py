@@ -940,13 +940,9 @@ def q_dedup_minhash(spark, sf):
     # exact and production runs each shingled the corpus twice
     # (signature + verify side), 4 passes total; the shared lazy
     # localCheckpoint shingles once and every consumer reads the
-    # materialized 8-byte hash arrays locally (no exchange — the
-    # reuse_shingles repartition trade does not apply). Pair values are
-    # identical: with_shingle_hashes is deterministic, so sharing vs
-    # recomputing cannot change any Jaccard. Impl coverage note: the
-    # expr-vs-numpy same-pairs pin lives in pytest
-    # (test_minhash_numpy_signature_same_pairs); this gate still runs
-    # sig_impl= both ways end-to-end, unchanged.
+    # materialized 8-byte hash arrays locally (no exchange). Pair values
+    # are identical: with_shingle_hashes is deterministic, so sharing vs
+    # recomputing cannot change any Jaccard.
     sh = (
         with_shingle_hashes(
             fanout(d.select(F.col("doc_id").alias("__id"),
@@ -962,7 +958,7 @@ def q_dedup_minhash(spark, sf):
     ).withColumn("jaccard", F.round("jaccard", 6))
     prod = minhash_lsh_pairs(
         d, "text", "doc_id", num_perm=64, bands=16, shingle_k=3,
-        threshold=0.5, sig_impl="numpy", shingles=sh,
+        threshold=0.5, shingles=sh,
     )
     return _recall_gate(exact, prod, ["id_a", "id_b"], 90)
 
@@ -972,12 +968,6 @@ def q_dedup_minhash_bench(spark, sf):
     # The oracle-gated q_dedup_minhash runs bands=num_perm for exact
     # recall, which inflates the candidate set ~20x — correct for the
     # gate, wrong for the bench (r2 regression: 2.7s -> 15.1s).
-    # sig_impl="expr" since the r11 single-expr restructure: the within-
-    # JVM A/B (scripts/minhash_ab.py) measured the expression fold at
-    # 0.93-0.96 s vs ~1.08 for the then-numpy path — the "numpy 3x
-    # faster" note that used to live here predates that restructure and
-    # measured the SIGNATURE STAGE in isolation, not the full row; the
-    # gated q_dedup_minhash still exercises both impls (r12 doc fix).
     from rayforce_spark.datapipe import minhash_lsh_pairs
 
     (d,) = _t(spark, sf, "documents")
@@ -991,14 +981,9 @@ def q_dedup_minhash_bench(spark, sf):
     # cores/2-beats-32-way sweep predates the slim verify restructure
     # and no longer reproduces.
     d = d.select("doc_id", "text")
-    # reuse_shingles=False since the r7 verify restructure: the slim-pair
-    # verify no longer shuffles shingle arrays, so the reuse exchange
-    # (which DOES move every doc's array once) now costs more than the
-    # second scan-stage recompute it saves — measured min-of-6 x2 runs:
-    # noreuse 0.55-0.71 s vs reuse 0.89-1.07 s at sf0.1
     return minhash_lsh_pairs(
         d, "text", "doc_id", num_perm=64, bands=16, shingle_k=3,
-        threshold=0.5, sig_impl="expr", reuse_shingles=False,
+        threshold=0.5,
     )
 
 

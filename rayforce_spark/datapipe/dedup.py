@@ -7,8 +7,8 @@ Scale design notes (100 TB):
   no explode of (row × shingle × permutation). Banding emits `bands` rows
   per doc (small constant), bucket join finds candidates, exact Jaccard
   verifies candidates only.
-* simhash — tokens explode once; 64 conditional-sum aggregates rebuild the
-  fingerprint per doc in a single grouped pass.
+* simhash — per-doc distinct token hashes as a JVM expression, then a
+  per-bit majority vote in one Arrow pass: no explode, no shuffle.
 * embedding cosine — exact all-pairs is O(n²) and only for modest n /
   verification; the LSH route (random hyperplanes) is the scale path.
 """
@@ -23,24 +23,6 @@ from pyspark.sql import types as T
 def _tokens(text: Column) -> Column:
     """Lowercased whitespace tokens — shared tokenizer for dedup/text ops."""
     return F.split(F.trim(F.lower(text)), r"\s+")
-
-
-def _require_arrow(feature: str, fallback: str) -> None:
-    """Fail fast DRIVER-side when an Arrow-twin default can't run:
-    pandas+pyarrow are hard runtime dependencies of every entry point
-    whose default impl is a pandas_udf twin (r10 verdict #3) — without
-    this check a missing import surfaces as an opaque worker-side stack
-    trace mid-job instead of a one-line error naming the
-    zero-dependency fallback."""
-    try:
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            f"{feature}: the default Arrow implementation needs pandas "
-            f"and pyarrow on the driver and every executor (missing: "
-            f"{e.name}); pass {fallback} for the zero-dependency JVM "
-            "expression path") from e
 
 
 def fanout(df: DataFrame) -> DataFrame:
@@ -58,33 +40,6 @@ def fanout(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)
     return df
-
-
-def _shingles_of_words(words: Column, k: int) -> Column:
-    """Distinct k-word shingles from an ALREADY-MATERIALIZED words column.
-
-    PERFORMANCE: ``words`` must be a plain column reference. Inlining the
-    split() expression here would re-evaluate it per array element inside
-    the transform lambda (O(doc_len²) work — measured 10× slowdown);
-    keeping it a materialized column makes Catalyst evaluate it once
-    (CollapseProject declines to merge multi-referenced non-trivial
-    projections)."""
-    if k == 1:
-        return F.array_distinct(words)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - k + 1, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), " "))
-    )
-
-
-def with_shingles(df: DataFrame, text_col: str, k: int, out: str) -> DataFrame:
-    """Add a distinct-k-shingle array column (two-step projection, see
-    _shingles_of_words)."""
-    return (
-        df.withColumn("__rf_words", _tokens(F.col(text_col)))
-        .withColumn(out, _shingles_of_words(F.col("__rf_words"), k))
-        .drop("__rf_words")
-    )
 
 
 def with_shingle_hashes(df: DataFrame, text_col: str, k: int, out: str) -> DataFrame:
@@ -185,25 +140,6 @@ def dedup_exact(df: DataFrame, cols: list[str], *, id_col: str,
     return df.join(keeper, [*cols, id_col], "left_semi")
 
 
-def minhash_signature(shingles: Column, *, num_perm: int) -> Column:
-    """MinHash signature as an array<long> of ``num_perm`` values over an
-    ALREADY-MATERIALIZED shingle array column (materialize it once with a
-    select — inlining the shingle expression here would replicate its
-    computation num_perm times in the plan).
-
-    One xxhash64 per STRING shingle, then the permutation family re-hashes
-    the resulting i64 with a per-permutation seed column: string hashing
-    happens once, the num_perm re-hashes are fixed-width (8-byte) — and
-    overflow-free, which matters under Spark 4's default ANSI mode (a
-    wrapping multiply-add family would throw ARITHMETIC_OVERFLOW).
-    Entirely JVM-side expressions. Prefer the two-step spelling
-    (materialize base hashes, then minhash_signature_from_hashes) in
-    pipelines — see the CollapseProject note on _shingles_of_words."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_perm=num_perm
-    )
-
-
 def minhash_signature_from_hashes(base_hashes: Column, *, num_perm: int) -> Column:
     """Signature from an ALREADY-MATERIALIZED array<long> of shingle
     hashes — the per-permutation work is pure integer arithmetic.
@@ -228,59 +164,11 @@ def minhash_signature_from_hashes(base_hashes: Column, *, num_perm: int) -> Colu
     )
 
 
-def minhash_signature_numpy(num_perm: int):
-    """Arrow-vectorized MinHash signature: a pandas_udf computing
-    ``sig[i] = min over shingle hashes of mix_i(h)`` with one numpy
-    broadcast per row batch (universal-hash family ``(a_i*h + b_i)``
-    xor-shifted; odd multipliers, fixed seed — deterministic across runs
-    and executors).
-
-    3x faster than the expression fold at sf0.1 (signature stage 1.67s ->
-    0.57s, 5k docs x ~200 shingles x 64 perms): the fold allocates a
-    64-wide array per shingle, the numpy form is one (64, |S|) integer
-    broadcast per doc in an Arrow batch. Values differ from the xxhash64
-    expression family, but MinHash consumers only need a uniform hash
-    family — the banded-LSH recall bound and the bands=num_perm
-    exact-recall argument hold identically, and the verify stage outputs
-    exact Jaccard either way."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.default_rng(7)
-    a = rng.integers(1, 2**63, num_perm, dtype=np.int64).astype(np.uint64) | 1
-    b = rng.integers(0, 2**63, num_perm, dtype=np.int64).astype(np.uint64)
-    A, B = a[:, None], b[:, None]
-
-    def _sig(bh):
-        out = []
-        for lst in bh:
-            if lst is None or len(lst) == 0:
-                out.append([None] * num_perm)
-                continue
-            s = np.asarray(lst, dtype=np.int64).astype(np.uint64)
-            x = A * s[None, :] + B  # wraps mod 2^64
-            x ^= x >> 33
-            out.append(x.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    # explicit annotation objects: the module's `from __future__ import
-    # annotations` would leave string hints that pandas_udf cannot
-    # resolve without module-global pandas
-    _sig.__annotations__ = {"bh": pd.Series, "return": pd.Series}
-    return pandas_udf(_sig, "array<long>")
-
-
-def _minhash_sig(shingled: DataFrame, *, num_perm: int,
-                 sig_impl: str = "expr") -> DataFrame:
+def _minhash_sig(shingled: DataFrame, *, num_perm: int) -> DataFrame:
     """(__id, __sig) signatures over a (__id, __bh) shingle-hash stream
     — the shared signature stage for the pair join and the persisted
     index (identical family, so their buckets are interchangeable)."""
-    if sig_impl == "numpy":
-        sig_col = minhash_signature_numpy(num_perm)(F.col("__bh"))
-    else:
-        sig_col = minhash_signature_from_hashes(F.col("__bh"),
-                                                num_perm=num_perm)
+    sig_col = minhash_signature_from_hashes(F.col("__bh"), num_perm=num_perm)
     # extra columns (e.g. the guard's __gkey collapse key) ride along;
     # the index path passes exactly (__id, __bh), so its output schema
     # — and the persisted bucket-leg format downstream — is unchanged
@@ -375,8 +263,8 @@ def _dense_decision(b: DataFrame, keys: list[str], gkey: str,
       7-bit chunk keys make hot buckets NORMAL, measured 127M predicted
       pairs on the ordinary sf0.1 corpus): keep the sparse join but
       repartition its input to cluster width, AQE-immune — the r11
-      manual cand_parallelism fix, now automatic. Collapse would only
-      add overhead here (measured: simhash sf0.1 auto-collapse 3.1 s
+      manual width pin, now automatic. Collapse would only add overhead
+      here (measured: simhash sf0.1 auto-collapse 3.1 s
       vs sparse 1.6 s, because reps ≈ docs).
 
     One map-side-combined aggregate over the slim checkpointed bucket
@@ -530,7 +418,7 @@ def _minhash_verify(cand: DataFrame, texts: DataFrame,
 
 def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
                          num_perm: int, bands: int, shingle_k: int,
-                         threshold: float, sig_impl: str,
+                         threshold: float,
                          shingles: DataFrame | None = None) -> DataFrame:
     """Rep-collapsed MinHash pair plan for duplicate-DENSE corpora.
 
@@ -576,7 +464,7 @@ def _minhash_pairs_dense(df: DataFrame, text_col: str, id_col: str, *,
     # stream against the collapsed id set; feeds both the signature
     # subtree and the verify texts
     rep_sh = keyed.join(rep_ids, "__id", "left_semi").select("__id", "__bh")
-    sig = _minhash_sig(rep_sh, num_perm=num_perm, sig_impl=sig_impl)
+    sig = _minhash_sig(rep_sh, num_perm=num_perm)
     banded = _band_buckets(sig, num_perm=num_perm, bands=bands)
     b = (banded.localCheckpoint(eager=False)
          .repartition(p, "__bucket"))
@@ -605,9 +493,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     threshold: float = 0.7,
-    sig_impl: str = "expr",
-    reuse_shingles: bool = False,
-    cand_parallelism: int | None = None,
     guard: str = "auto",
     dense_threshold: int | None = None,
     shingles: DataFrame | None = None,
@@ -616,30 +501,14 @@ def minhash_lsh_pairs(
     Jaccard over the shingle sets.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    Plan: signature (no shuffle) -> explode bands (×bands rows) -> bucket
-    self-join (shuffle on band hash) -> distinct candidates -> verify via
-    exact Jaccard on the two shingle sets (array intersect/union on the
-    joined pair only).
-
-    ``sig_impl``: "expr" (default) keeps the signature a pure JVM
-    expression fold — zero Python in the plan; "numpy" routes it through
-    :func:`minhash_signature_numpy` (Arrow batches, 3x faster stage,
-    measured) — the recall bounds are family-independent, so both
-    produce the same verified pair set at bands=num_perm.
-
-    ``reuse_shingles``: the signature path and the verify path both need
-    the shingle-hash arrays. Default (False) computes them twice — two
-    scan-stage passes, NO array shuffle, the right trade at corpus scale
-    where recompute is cheaper than moving every document's shingle set
-    over the network. True inserts one repartition exchange after the
-    shingle pass so both consumers hang off the SAME subtree and Spark
-    plans a ReusedExchange — shingles are computed once and shuffled
-    once. NB: since the slim-pair verify restructure (which stopped
-    shuffling shingle arrays on the verify side) the reuse exchange is a
-    net LOSS at bench scale (sf0.1: reuse 0.89-1.07 s vs noreuse
-    0.55-0.71 s min-of-6) — it moves every document's array to save a
-    scan-stage recompute that is cheaper than the move. Kept for corpora
-    where shingling dominates (very long documents / large k).
+    Plan: signature (JVM expression fold, no shuffle) -> explode bands
+    (×bands rows) -> bucket self-join (shuffle on band hash) -> distinct
+    candidates -> verify via exact Jaccard on the two shingle sets
+    (array intersect/union on the joined pair only). The verify side
+    re-shingles rather than shuffling the signature side's arrays: a
+    scan-stage recompute is cheaper than moving every document's
+    shingle set (measured at sf0.1: recompute 0.55-0.71 s vs a shared
+    repartition 0.89-1.07 s, min-of-6).
 
     ``guard`` (r12, default "auto"): the dense-corpus emission guard.
     After the banded rows are checkpointed, one cheap count-per-bucket
@@ -650,35 +519,26 @@ def minhash_lsh_pairs(
     corpora; identical output, no quadratic duplicate mass in the LSH
     join) or, when collapse wouldn't halve the emission (near-dup-dense
     — distinct sets sharing buckets), pins the sparse join's width to
-    cluster parallelism, AQE-immune (the r11 manual cand_parallelism
-    fix, now automatic). "off" restores the pure-lazy r11 plan (no
-    stats job — the returned DataFrame triggers no work until acted
-    on). The guard decision changes only the PLAN, never the result,
-    so its data-dependence is safe. On a corpus dense enough to
+    cluster parallelism, AQE-immune. "off" restores the pure-lazy r11
+    plan (no stats job — the returned DataFrame triggers no work until
+    acted on). The guard decision changes only the PLAN, never the
+    result, so its data-dependence is safe. On a corpus dense enough to
     trigger collapse, the already-built sparse banding is discarded
     (detection needs the bucket distribution) — one wasted signature
     pass, dwarfed by the 20+ min single-task crawl it avoids
     (measured, 10x template corpus).
 
-    ``cand_parallelism``: explicit AQE-immune width for the candidate
-    self-join — pass the cluster's parallelism to pin the sparse plan's
-    join width yourself. Pre-dates the auto guard; when set, the stats
-    job is skipped and the sparse plan (pinned) always runs.
-
     ``shingles`` (r13): a pre-computed ``(__id, __bh)`` shingle-hash
     frame (the with_shingle_hashes output over the same corpus/k) to
     use for BOTH the signature and verify sides instead of shingling
     here. For a single pipeline the default recompute stays the right
-    trade (see ``reuse_shingles``), but when a caller runs TWO
-    pipelines over one corpus (q_dedup_minhash's exact-recall gate vs
-    production tuning), a caller-side lazy localCheckpoint of this
-    frame shingles the corpus once for all four consumers instead of
-    four times — with no shuffle (checkpoint partitions are read
-    locally, unlike the reuse_shingles exchange). ``reuse_shingles``
-    is moot and ignored when this is set."""
+    trade, but when a caller runs TWO pipelines over one corpus
+    (q_dedup_minhash's exact-recall gate vs production tuning), a
+    caller-side lazy localCheckpoint of this frame shingles the corpus
+    once for all four consumers instead of four times — with no
+    shuffle (checkpoint partitions are read locally)."""
     if shingles is not None:
         shingled_in = shingles.select("__id", "__bh")
-        reuse_shingles = False
     else:
         df = fanout(df)
         shingled_in = with_shingle_hashes(
@@ -686,7 +546,7 @@ def minhash_lsh_pairs(
                       F.col(text_col).alias("__text")),
             "__text", shingle_k, "__bh",
         ).select("__id", "__bh")
-    if guard == "auto" and not cand_parallelism:
+    if guard == "auto":
         # the guard's collapse key (hash of the sorted shingle SET)
         # rides through the signature/banding projections so one stats
         # aggregate over the checkpointed rows can split duplicate mass
@@ -694,10 +554,7 @@ def minhash_lsh_pairs(
         shingled_in = shingled_in.select(
             "__id", F.xxhash64(F.array_sort("__bh")).alias("__gkey"),
             "__bh")
-    if reuse_shingles:
-        shingled_in = shingled_in.repartition(
-            df.sparkSession.sparkContext.defaultParallelism // 2 or 1)
-    sig = _minhash_sig(shingled_in, num_perm=num_perm, sig_impl=sig_impl)
+    sig = _minhash_sig(shingled_in, num_perm=num_perm)
     banded = _band_buckets(sig, num_perm=num_perm, bands=bands)
     # within-bucket pairs via a bucket SELF-JOIN (r11 — the r8->r9
     # simhash lesson applied to minhash): the former
@@ -713,20 +570,8 @@ def minhash_lsh_pairs(
     # so the signature subtree isn't computed per join side, and pairs
     # STREAM through join tasks instead of materializing per-bucket
     # arrays.
-    #
-    # ``cand_parallelism`` (duplicate-DENSE corpora): AQE sizes the
-    # join's exchanges from banded's tiny map bytes and cannot see the
-    # quadratic emission, so on a corpus where every doc has ~100 near-
-    # identical copies the join runs on 1-2 coalesced partitions
-    # (measured: the 10x template corpus crawled 20+ min; with the pin
-    # at 32 the same run takes 3.8 s end-to-end for 250,600 verified
-    # pairs). The pin costs an extra ~0.2-0.7 s at sparse/bench scale,
-    # so it is opt-in — and on corpora THAT dense, exact-dedup first
-    # remains the documented cheaper answer.
     b = banded.localCheckpoint(eager=False)
-    if cand_parallelism:
-        b = b.repartition(int(cand_parallelism), "__bucket")
-    elif guard == "auto":
+    if guard == "auto":
         thresh = (_DENSE_GUARD_THRESHOLD if dense_threshold is None
                   else dense_threshold)
         # the stats job forces b's checkpoint materialization — work the
@@ -740,7 +585,7 @@ def minhash_lsh_pairs(
             return _minhash_pairs_dense(
                 df, text_col, id_col, num_perm=num_perm, bands=bands,
                 shingle_k=shingle_k, threshold=threshold,
-                sig_impl=sig_impl, shingles=shingles)
+                shingles=shingles)
         if decision == "pin":
             b = b.repartition(
                 df.sparkSession.sparkContext.defaultParallelism,
@@ -769,11 +614,6 @@ def minhash_lsh_pairs(
         # recompute and no exchange
         texts = shingles.select(F.col("__id").alias("__tid"),
                                 F.col("__bh").alias("__vsh"))
-    elif reuse_shingles:
-        # byte-identical subtree to the signature path's input, ending in
-        # the same exchange -> ReusedExchange, shingles computed once
-        texts = shingled_in.select(F.col("__id").alias("__tid"),
-                                   F.col("__bh").alias("__vsh"))
     else:
         texts = with_shingle_hashes(
             df.select(F.col(id_col).alias("__tid"),
@@ -886,8 +726,8 @@ def stamp_index_format(spark, path: str, family: str) -> None:
 
 
 def _minhash_parts(df: DataFrame, text_col: str, id_col: str, *,
-                   num_perm: int, bands: int, shingle_k: int,
-                   sig_impl: str) -> tuple[DataFrame, DataFrame]:
+                   num_perm: int, bands: int,
+                   shingle_k: int) -> tuple[DataFrame, DataFrame]:
     """(shingles, buckets) for a batch — the two persisted legs of the
     MinHash index, derived from ONE materialized shingle pass: the two
     legs feed two independent Spark jobs (two writes, or a write and a
@@ -902,24 +742,25 @@ def _minhash_parts(df: DataFrame, text_col: str, id_col: str, *,
                           F.col(text_col).alias("__t")),
         "__t", shingle_k, "__bh",
     ).select("__id", "__bh").localCheckpoint(eager=False)
-    sig = _minhash_sig(shingled, num_perm=num_perm, sig_impl=sig_impl)
+    sig = _minhash_sig(shingled, num_perm=num_perm)
     return shingled, _band_buckets(sig, num_perm=num_perm, bands=bands)
 
 
 def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
                       id_col: str, *, num_perm: int = 64, bands: int = 16,
-                      shingle_k: int = 3, sig_impl: str = "expr") -> None:
+                      shingle_k: int = 3) -> None:
     """Persist a MinHash-LSH dedup INDEX — the continuous-ingestion
     twin of :func:`minhash_lsh_pairs` (reference analog: the dedup
     workflows its docs build from pair output, run incrementally as a
     corpus grows; same shape as similarity.set_ivf's train-once/
     probe-many layout). Writes under ``path``:
 
-    - ``_meta``      — the banding parameters plus the on-disk format
-      version (probes and extensions MUST band identically or buckets
-      don't line up; they read this sidecar rather than trusting
-      call-site kwargs, and raise on a format mismatch — see
-      _check_index_format),
+    - ``_meta``      — the banding parameters, the signature family
+      (``sig_impl``, always "expr") and the on-disk format version
+      (probes and extensions MUST band identically or buckets don't
+      line up; they read this sidecar rather than trusting call-site
+      kwargs, and raise on a format or family mismatch — see
+      _read_minhash_meta),
     - ``buckets``    — (__id, __bucket), bands rows per doc, 16 bytes
       each: the slim candidate-join side,
     - ``shingles``   — (__id, __bh shingle-hash array): the exact-
@@ -941,11 +782,11 @@ def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
     path and switch readers over, or delete the old index first."""
     shingled, buckets = _minhash_parts(
         corpus, text_col, id_col, num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, sig_impl=sig_impl)
+        shingle_k=shingle_k)
     buckets.write.mode("overwrite").parquet(f"{path}/buckets")
     shingled.write.mode("overwrite").parquet(f"{path}/shingles")
     corpus.sparkSession.createDataFrame(
-        [(int(num_perm), int(bands), int(shingle_k), str(sig_impl),
+        [(int(num_perm), int(bands), int(shingle_k), "expr",
           _MINHASH_INDEX_FORMAT)],
         "num_perm int, bands int, shingle_k int, sig_impl string,"
         " format int",
@@ -953,10 +794,23 @@ def set_minhash_index(corpus: DataFrame, path: str, text_col: str,
 
 
 def _read_minhash_meta(spark, path: str) -> dict:
+    """Banding parameters from the index's ``_meta`` sidecar. Raises
+    on a format mismatch and on a signature family other than the
+    expression fold: an index signed by the removed numpy family keeps
+    format 2, but its stored buckets never match expr-signed probes or
+    extensions, so it would silently return missing pairs."""
     r = spark.read.parquet(f"{path}/_meta").collect()[0]
     _check_index_format(r, _MINHASH_INDEX_FORMAT, "minhash", path)
+    if r["sig_impl"] != "expr":
+        raise ValueError(
+            f"minhash index at {path} was signed with sig_impl="
+            f"{r['sig_impl']!r}, but this build signs only with the "
+            "expression fold: its stored buckets never match new ones, "
+            "and probing or extending it would silently return "
+            "incomplete pairs. Rebuild it into a fresh path with "
+            "set_minhash_index.")
     return {"num_perm": r["num_perm"], "bands": r["bands"],
-            "shingle_k": r["shingle_k"], "sig_impl": r["sig_impl"]}
+            "shingle_k": r["shingle_k"]}
 
 
 def extend_minhash_index(new_df: DataFrame, path: str, text_col: str,
@@ -1540,21 +1394,21 @@ def _jaccard_prefix_filtered(toks: DataFrame, threshold: float,
 
 
 def simhash_fingerprint_numpy(bits: int):
-    """Arrow twin of the 63-aggregate SimHash fingerprint: a pandas_udf
-    mapping a doc's distinct-token-hash array straight to its
-    fingerprint long — per row, bit b is set iff strictly more than
-    half the token hashes carry bit b (the exact condition of the
-    expression path's ±1 conditional sum: sum > 0 ⟺ 2·count_ones > n).
-    BIT-EQUAL to the grouped-aggregate plan by construction — the token
-    hashes come from the same JVM expression and the per-bit counts are
-    exact integer math — pinned by test_simhash_fp_numpy_bit_equal.
+    """Arrow SimHash fingerprint: a pandas_udf mapping a doc's
+    distinct-token-hash array straight to its fingerprint long — per
+    row, bit b is set iff strictly more than half the token hashes carry
+    bit b (the exact condition of the expression fold's ±1 conditional
+    sum: sum > 0 ⟺ 2·count_ones > n). BIT-EQUAL to that fold
+    (_simhash_expr) by construction — the token hashes come from the
+    same JVM expression and the per-bit counts are exact integer math —
+    pinned by test_simhash_fp_numpy_bit_equal.
 
-    Why it exists: the expression fingerprint needs an explode + a
+    Why Arrow: the expression fold needs an explode + a
     63-conditional-sum groupBy whose plan build/codegen costs ~20 s
     FIXED per call regardless of data (r10 index_bench: simhash probe
     23.6 s and extend 17-33 s flat at 1x and 10x corpus — plan cost,
-    not data cost). The numpy twin is one per-row (k × bits) bit-count
-    per Arrow batch: no explode, no shuffle, no 63-aggregate plan."""
+    not data cost). This is one per-row (k × bits) bit-count per Arrow
+    batch: no explode, no shuffle, no 63-aggregate plan."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1578,20 +1432,24 @@ def simhash_fingerprint_numpy(bits: int):
     return pandas_udf(_fp, "long")
 
 
+def _token_hash_sql(token_hash: str, tok: str) -> str:
+    """SQL text hashing the token variable/column ``tok`` to a long."""
+    if token_hash == "xxhash64":
+        return f"xxhash64({tok})"
+    if token_hash == "md5":
+        return f"cast(conv(substring(md5({tok}), 1, 15), 16, 10) as bigint)"
+    raise ValueError(f"unknown token_hash: {token_hash}")
+
+
 def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 63,
-            token_hash: str = "xxhash64",
-            fp_impl: str = "numpy") -> DataFrame:
+            token_hash: str = "xxhash64") -> DataFrame:
     """63-bit SimHash fingerprint per document (bit 63 omitted to stay in a
     signed long). Returns (id_col, simhash:long).
 
-    ``fp_impl="numpy"`` (default): token hashes are still a pure JVM
-    expression (one transform over the distinct-token array), but the
-    per-bit majority vote happens in an Arrow batch — no explode, no
-    grouped aggregation, and none of the 63-aggregate plan's ~20 s
-    fixed build cost (see :func:`simhash_fingerprint_numpy`; bit-equal,
-    pinned). ``"expr"`` keeps the pure-JVM plan: tokens explode once;
-    each bit is a conditional ±1 sum over token hashes — one grouped
-    aggregation, zero Python (authoritative, zero-dependency).
+    Token hashes are a pure JVM expression (one transform over the
+    distinct-token array); the per-bit majority vote happens in an
+    Arrow batch (see :func:`simhash_fingerprint_numpy`; bit-equal to
+    the grouped-aggregate fold, pinned).
 
     token_hash: "xxhash64" (default, fastest) or "md5" — a 60-bit hash
     derived from the first 15 hex chars of md5, reproducible in plain SQL
@@ -1600,45 +1458,40 @@ def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 63,
     constant 0, which costs nothing for recall (hamming distance ignores
     always-equal bits).
 
-    Ids must be unique (the standing dedup contract): the expr path
-    groups by id — duplicate-id rows would merge token sets — while the
-    numpy path is per-row."""
-    if token_hash == "xxhash64":
-        h_expr = F.xxhash64("tok")
-        h_sql = "xxhash64(t)"
-    elif token_hash == "md5":
-        h_expr = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-        h_sql = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
-    else:
-        raise ValueError(f"unknown token_hash: {token_hash}")
-    if fp_impl == "numpy":
-        _require_arrow("simhash fingerprints", "fp_impl='expr'")
-        qcol = text_col.replace("`", "``")
-        arr = F.expr(
-            f"transform(array_distinct(split(trim(lower(`{qcol}`)),"
-            f" '\\\\s+')), t -> {h_sql})")
-        # the expr path's explode drops docs with a null/empty token
-        # array (null text); size() is -1 for null — same drop here
-        return (
-            fanout(df)
-            .select(F.col(id_col).alias(id_col), arr.alias("__th"))
-            .filter(F.size("__th") > 0)
-            .select(id_col,
-                    simhash_fingerprint_numpy(bits)(F.col("__th"))
-                    .alias("simhash"))
-        )
-    if fp_impl != "expr":
-        raise ValueError(f"unknown fp_impl: {fp_impl!r} "
-                         "(expected 'numpy' or 'expr')")
+    Ids must be unique (the standing dedup contract). Docs with null
+    text are dropped."""
+    h_sql = _token_hash_sql(token_hash, "t")
+    qcol = text_col.replace("`", "``")
+    arr = F.expr(
+        f"transform(array_distinct(split(trim(lower(`{qcol}`)),"
+        f" '\\\\s+')), t -> {h_sql})")
+    # size() is -1 for null text: drop those docs, as the grouped fold's
+    # explode does
+    return (
+        fanout(df)
+        .select(F.col(id_col).alias(id_col), arr.alias("__th"))
+        .filter(F.size("__th") > 0)
+        .select(id_col,
+                simhash_fingerprint_numpy(bits)(F.col("__th"))
+                .alias("simhash"))
+    )
+
+
+def _simhash_expr(df: DataFrame, text_col: str, id_col: str, *,
+                  bits: int = 63, token_hash: str = "xxhash64") -> DataFrame:
+    """The pure-JVM spelling of :func:`simhash`, kept as the reference
+    its Arrow fingerprint is pinned bit-equal against: tokens explode
+    once; each bit is a conditional ±1 sum over token hashes — one
+    grouped aggregation, zero Python. Groups by id, so duplicate-id rows
+    would merge token sets."""
     toks = fanout(df).select(
         F.col(id_col).alias(id_col),
         F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("tok"),
-    ).withColumn("h", h_expr)
+    ).withColumn("h", F.expr(_token_hash_sql(token_hash, "tok")))
     # parsed expr strings, not composed Column objects: the 63
     # conditional-sum aggregates plus the 63-term fingerprint sum cost
     # ~2.5 s of py4j round-trips per call the Column way (measured at
-    # sf0.1 — half the row's driver-side plan-build); 64 parses of the
-    # same text are one hop each. Plans and values are identical.
+    # sf0.1); 64 parses of the same text are one hop each.
     bit_sums = [
         F.expr(f"sum(case when (h & {1 << b}) != 0 then 1 else -1 end)"
                f" as b{b}")
@@ -1984,8 +1837,7 @@ def _simhash_pairs_dense(fp: DataFrame, *, bands: int,
 
 def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
                       *, max_hamming: int = 3, bands: int | None = None,
-                      token_hash: str = "xxhash64",
-                      fp_impl: str = "numpy", guard: str = "auto",
+                      token_hash: str = "xxhash64", guard: str = "auto",
                       dense_threshold: int | None = None) -> DataFrame:
     """Near-dup pairs with SimHash distance <= max_hamming, found by the
     pigeonhole trick: split the fingerprint into ``bands`` chunks — any
@@ -2009,10 +1861,8 @@ def simhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     _simhash_validate(max_hamming, bands)
     # the fingerprint is 16 bytes/doc — a lazy localCheckpoint
     # materializes it once so neither self-join side (nor an AQE
-    # broadcast of one) re-runs the 63-bit aggregation over the token
-    # explosion
-    fp = (simhash(df, text_col, id_col, token_hash=token_hash,
-                  fp_impl=fp_impl)
+    # broadcast of one) re-runs the tokenize + fingerprint pass
+    fp = (simhash(df, text_col, id_col, token_hash=token_hash)
           .withColumnRenamed(id_col, "__id")
           .localCheckpoint(eager=False))
     banded = _simhash_banded(fp, bands)

@@ -84,7 +84,7 @@ def curate(
     pipeline.
 
     ``neardup_opts`` passes through to :func:`minhash_lsh_pairs`
-    (num_perm/bands/shingle_k/sig_impl) — production tunings
+    (num_perm/bands/shingle_k/guard) — production tunings
     (bands < num_perm) trade candidate volume for recall there.
     """
     out = docs

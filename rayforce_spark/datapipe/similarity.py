@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rayforce_spark.datapipe.dedup import (
-    _require_arrow,
     cosine_from_units,
     dot_units,
     norm_units,
@@ -154,7 +153,9 @@ def _qname(col_name: str) -> str:
 
 def _bucket_key(vec_name: str, hyperplanes) -> F.Column:
     """Sign-bit signature of the vector column (BY NAME) against each
-    hyperplane -> long. Built as one SQL string — see _sql_arr."""
+    hyperplane -> long. Built as one SQL string — see _sql_arr. The
+    expression reference the Arrow keys (_bucket_keys_pandas) are pinned
+    bit-equal against, and the streaming LSH's key builder."""
     v = _qname(vec_name)
     terms = []
     for i, plane in enumerate(hyperplanes):
@@ -165,10 +166,10 @@ def _bucket_key(vec_name: str, hyperplanes) -> F.Column:
 
 
 def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
-    """Arrow twin of _bucket_key for ALL tables at once: embedding ->
+    """Arrow bucket keys for ALL tables at once: embedding ->
     array<long> of ``tables`` bucket keys, one numpy batch pass.
 
-    BIT-EQUAL to the expr path by construction: the plane dot is
+    BIT-EQUAL to the _bucket_key expression by construction: the plane dot is
     accumulated SEQUENTIALLY over dimensions (one vectorized
     multiply-then-add per dimension, binary64 both ways), which is the
     exact rounding sequence of the interpreted aggregate(zip_with) fold
@@ -176,11 +177,11 @@ def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
     flip a sign at a bucket boundary. Pinned by
     test_lsh_bucket_keys_pandas_bit_equal.
 
-    Why it exists: the HOF fold is interpreted row-at-a-time JVM-side
+    Why Arrow: the HOF fold is interpreted row-at-a-time JVM-side
     (no codegen), so tables x planes x dim multiply-adds per row ran
-    ~4 s single-core on a 1-split input at sf0.1; the numpy twin is two
-    matrix ops per Arrow batch and parallelizes with input splits the
-    same way.
+    ~4 s single-core on a 1-split input at sf0.1; this is two matrix
+    ops per Arrow batch and parallelizes with input splits the same
+    way.
 
     Degenerate inputs follow the expr path's null story: a null vector
     or a length != dim vector keys to 0 for every table (any null in
@@ -189,9 +190,7 @@ def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
     TRUE, so a nan-poisoned dot sets the bit — the twin reproduces that
     with an explicit isnan-or (numpy's native NaN >= 0 is false, which
     silently flipped bucket keys before; pinned by
-    test_lsh_bucket_keys_nan_bit_equal). A NaN embedding in a 100 TB
-    corpus thus degrades recall identically on both paths instead of
-    diverging between them."""
+    test_lsh_bucket_keys_nan_bit_equal)."""
     import numpy as np
     import pandas as pd
 
@@ -227,29 +226,14 @@ def _bucket_keys_pandas(dim: int, planes: int, tables: int, seed: int):
 
 
 def _bucket_structs(vec_name: str, *, dim: int, planes: int, tables: int,
-                    seed: int, key_impl: str = "pandas") -> F.Column:
+                    seed: int) -> F.Column:
     """array<struct<tbl:int, key:long>> of all ``tables`` bucket keys
     for the vector column (BY NAME) — the shared bucket constructor for
-    every LSH consumer. ``key_impl="pandas"`` (default) is the Arrow
-    twin (see _bucket_keys_pandas); ``"expr"`` is the pure-JVM
-    expression path (authoritative for degenerate NaN inputs)."""
-    if key_impl == "pandas":
-        _require_arrow("LSH bucket keys", "key_impl='expr'")
-        ks = _bucket_keys_pandas(dim, planes, tables, seed)(F.col(vec_name))
-        return F.transform(
-            ks, lambda k, i: F.struct(i.cast("int").alias("tbl"),
-                                      k.alias("key")))
-    if key_impl != "expr":
-        raise ValueError(f"unknown key_impl: {key_impl!r} "
-                         "(expected 'pandas' or 'expr')")
-    return F.array(*[
-        F.struct(
-            F.lit(t).alias("tbl"),
-            _bucket_key(vec_name,
-                        _hyperplanes(dim, planes, t, seed)).alias("key"),
-        )
-        for t in range(tables)
-    ])
+    every LSH consumer (keys from _bucket_keys_pandas)."""
+    ks = _bucket_keys_pandas(dim, planes, tables, seed)(F.col(vec_name))
+    return F.transform(
+        ks, lambda k, i: F.struct(i.cast("int").alias("tbl"),
+                                  k.alias("key")))
 
 
 def _sq_dist_sql(vec_name: str, centroid: list[float]) -> str:
@@ -265,7 +249,8 @@ def _nearest(vec_name: str, centroids: list[list[float]],
     """Indices of the ``nprobe`` nearest centroids as array<int> —
     array_sort over (distance, index) structs, lexicographic min first.
     One SQL string (see _sql_arr): nlist x dim literals as Columns cost
-    a py4j hop per element, re-paid every Lloyd's iteration."""
+    a py4j hop per element. The expression reference the Arrow
+    assignment (_nearest_pandas) is pinned bit-equal against."""
     scored = "array(" + ",".join(
         f"struct({_sq_dist_sql(vec_name, c)} AS d, {i} AS i)"
         for i, c in enumerate(centroids)
@@ -274,26 +259,26 @@ def _nearest(vec_name: str, centroids: list[list[float]],
                   " s -> s.i)")
 
 
-def _nearest_pandas(centroids: list[list[float]], nprobe: int):
-    """Arrow twin of _nearest: embedding -> array<int> of the nprobe
-    nearest centroid indices, one numpy batch pass. BIT-EQUAL ranking
-    to the expr path: squared distances accumulate SEQUENTIALLY over
-    dimensions ((x-y)*(x-y) then add, binary64 — the interpreted
-    fold's exact rounding sequence), and a stable argsort reproduces
-    the (distance, index) lexicographic order. Degenerate rows (null
-    vector, length != dim) yield [0..nprobe-1], exactly the expr
-    path's all-null-distance tie-break (verified); NaN elements also
-    agree (r10, pinned by test_ivf_nearest_nan_bit_equal): a NaN
-    distance sorts LAST on both paths (Spark orders NaN above every
-    number; numpy's stable argsort places NaN at the end), and ties —
-    all-NaN rows or equal finite distances — fall back to ascending
-    centroid index on both (Spark's struct comparison treats NaN ==
-    NaN and compares i; stable argsort preserves input order). Why
-    the twin exists: the fold is
-    interpreted row-at-a-time JVM-side, so corpus × nlist × dim
-    multiply-adds dominate IVF assignment — the 100 TB cost of
-    set_ivf/knn_ivf's corpus pass, not just a gate-seconds issue.
-    Pinned by test_ivf_nearest_pandas_bit_equal."""
+def _nearest_pandas(vec_name: str, centroids: list[list[float]],
+                    nprobe: int) -> F.Column:
+    """IVF assignment: indices of the ``nprobe`` nearest centroids to
+    the vector column (BY NAME) as array<int>, one numpy pass per Arrow
+    batch. BIT-EQUAL ranking to the _nearest expression: squared
+    distances accumulate SEQUENTIALLY over dimensions ((x-y)*(x-y) then
+    add, binary64 — the interpreted fold's exact rounding sequence),
+    and a stable argsort reproduces the (distance, index) lexicographic
+    order. Degenerate rows (null vector, length != dim) yield
+    [0..nprobe-1], exactly the expression's all-null-distance
+    tie-break; NaN elements also agree (r10, pinned by
+    test_ivf_nearest_nan_bit_equal): a NaN distance sorts LAST on both
+    (Spark orders NaN above every number; numpy's stable argsort places
+    NaN at the end), and ties — all-NaN rows or equal finite distances
+    — fall back to ascending centroid index on both (Spark's struct
+    comparison treats NaN == NaN and compares i; stable argsort
+    preserves input order). Why Arrow: the fold is interpreted
+    row-at-a-time JVM-side, so corpus × nlist × dim multiply-adds
+    dominate IVF assignment — the 100 TB cost of set_ivf/knn_ivf's
+    corpus pass. Pinned by test_ivf_nearest_pandas_bit_equal."""
     import numpy as np
     import pandas as pd
 
@@ -318,21 +303,7 @@ def _nearest_pandas(centroids: list[list[float]], nprobe: int):
         return pd.Series(list(out))
 
     nn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(nn, T.ArrayType(T.IntegerType()))
-
-
-def _nearest_impl(vec_name: str, centroids: list[list[float]],
-                  nprobe: int, impl: str = "pandas") -> F.Column:
-    """Dispatch for the nearest-centroid assignment: ``"pandas"``
-    (default) is the Arrow twin, ``"expr"`` the pure-JVM expression
-    (authoritative for NaN inputs)."""
-    if impl == "pandas":
-        _require_arrow("IVF centroid assignment", "assign_impl='expr'")
-        return _nearest_pandas(centroids, nprobe)(F.col(vec_name))
-    if impl != "expr":
-        raise ValueError(f"unknown assign_impl: {impl!r} "
-                         "(expected 'pandas' or 'expr')")
-    return _nearest(vec_name, centroids, nprobe)
+    return F.pandas_udf(nn, T.ArrayType(T.IntegerType()))(F.col(vec_name))
 
 
 def ivf_train(
@@ -343,7 +314,6 @@ def ivf_train(
     nlist: int = 16,
     iters: int = 5,
     max_train_rows: int = 10_000,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> list[list[float]]:
     """Train IVF centroids: distributed deterministic sampling, then
@@ -368,15 +338,13 @@ def ivf_train(
     full-corpus ASSIGNMENT in knn_ivf/set_ivf — stays distributed and
     unchanged. Numerics: the assignment distance accumulates
     SEQUENTIALLY over dimensions, the exact rounding sequence of the
-    expr/pandas assignment twins (_nearest_pandas), with the same
+    corpus assignment (_nearest_pandas), with the same
     NaN-sorts-last and degenerate-row story; per-cluster means
     accumulate in sample order (np.add.at), which differs from the old
     Summarizer partition-merge order by last-ulp rounding only — the
     trained centroids are an approximation either way, every probe
     re-ranks with exact cosine, and the knn_recall gate margins were
     re-measured unchanged-to-better at all three SFs (OPTIMIZATION_r13).
-    ``assign_impl`` is kept for API compatibility; training assignment
-    is always the shared sequential-fold spelling now.
 
     ``corpus_rows``: pass the row count when the pipeline already knows
     it, to skip the sizing scan — otherwise training pays one extra
@@ -421,7 +389,7 @@ def ivf_train(
     # from the means; the old Spark path fed them to cluster 0's
     # Summarizer where a null vector errored — dropping them is the
     # defined behavior now (assignment of the CORPUS still routes them
-    # to list 0 via _nearest_impl, unchanged)
+    # to list 0 via _nearest_pandas, unchanged)
     M = np.array(
         [vec for vec in vecs if vec is not None and len(vec) == dim],
         dtype=np.float64,
@@ -461,7 +429,6 @@ def knn_ivf(
     iters: int = 5,
     centroids: list[list[float]] | None = None,
     query_id_col: str | None = None,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index: corpus vectors
@@ -477,7 +444,7 @@ def knn_ivf(
     if centroids is None:
         centroids = ivf_train(
             corpus, vec_col, id_col, nlist=nlist, iters=iters,
-            assign_impl=assign_impl, corpus_rows=corpus_rows,
+            corpus_rows=corpus_rows,
         )
     if not centroids:
         # empty corpus trains zero centroids; F.array() of no columns has
@@ -493,13 +460,12 @@ def knn_ivf(
         )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__list", _nearest_impl("__cv", centroids, 1, assign_impl)[0]) \
+    ).withColumn("__list", _nearest_pandas("__cv", centroids, 1)[0]) \
         .withColumn("__cn", norm_units(F.col("__cv")))
     q = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn(
-        "__list", F.explode(_nearest_impl("__qv", centroids, nprobe,
-                                          assign_impl))
+        "__list", F.explode(_nearest_pandas("__qv", centroids, nprobe))
     ).withColumn("__qn", norm_units(F.col("__qv")))
     cand = q.join(c, "__list").select(
         "query_id", "neighbor_id",
@@ -529,7 +495,6 @@ def knn_lsh(
     tables: int = 4,
     seed: int = 42,
     query_id_col: str | None = None,
-    key_impl: str = "pandas",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH candidate retrieval +
     exact cosine re-rank. Each side computes ``tables`` bucket keys; the
@@ -537,9 +502,9 @@ def knn_lsh(
     broadcast or skew-split. Candidate retrieval and the multi-table
     dropDuplicates are SLIM (id pairs only); vectors re-attach after the
     dedup via per-side hash joins, so vector bytes move O(n) per side,
-    not O(candidate pairs). Bucket keys default to the Arrow twin
-    (bit-equal, see _bucket_keys_pandas). Returns (query_id,
-    neighbor_id, cos, rank)."""
+    not O(candidate pairs). Bucket keys come from the Arrow batch
+    builder (bit-equal to the expression, see _bucket_keys_pandas).
+    Returns (query_id, neighbor_id, cos, rank)."""
     qid = query_id_col or id_col
 
     def payload(df, idc, out_id):
@@ -550,7 +515,7 @@ def knn_lsh(
     def slim_buckets(sel, out_id):
         buckets = _bucket_structs(
             f"__{out_id}_v", dim=dim, planes=planes, tables=tables,
-            seed=seed, key_impl=key_impl)
+            seed=seed)
         return sel.select(out_id, F.explode(buckets).alias("bk")) \
                   .select(out_id, "bk.tbl", "bk.key")
 
@@ -590,7 +555,6 @@ def embedding_dup_pairs_lsh(
     tables: int = 8,
     seed: int = 42,
     impl: str = "expr",
-    key_impl: str = "pandas",
 ) -> DataFrame:
     """Corpus-scale embedding near-duplicate pairs: hyperplane-LSH
     candidate buckets + exact cosine verification — the scale path for
@@ -627,8 +591,7 @@ def embedding_dup_pairs_lsh(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).withColumn("__nu", norm_units(F.col("__v")))
     buckets = _bucket_structs("__v", dim=dim, planes=planes,
-                              tables=tables, seed=seed,
-                              key_impl=key_impl)
+                              tables=tables, seed=seed)
     if impl == "block":
         # r9: verify INSIDE each bucket with the shared numpy block
         # scorer (bit-equal fixed-point math, score_units_block) — each
@@ -745,7 +708,6 @@ def set_ivf(
     nlist: int = 16,
     iters: int = 5,
     centroids: list[list[float]] | None = None,
-    assign_impl: str = "pandas",
     corpus_rows: int | None = None,
 ) -> list[list[float]]:
     """Persist an IVF index: train (or reuse) centroids, write them as
@@ -757,8 +719,7 @@ def set_ivf(
     never re-shuffles. Returns the trained centroids."""
     if centroids is None:
         centroids = ivf_train(corpus, vec_col, id_col, nlist=nlist,
-                              iters=iters, assign_impl=assign_impl,
-                              corpus_rows=corpus_rows)
+                              iters=iters, corpus_rows=corpus_rows)
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
@@ -768,7 +729,7 @@ def set_ivf(
         (corpus.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("__cv"))
          .withColumn("__list",
-                     _nearest_impl("__cv", centroids, 1, assign_impl)[0])
+                     _nearest_pandas("__cv", centroids, 1)[0])
          .write.partitionBy("__list").mode("overwrite")
          .parquet(f"{path}/data"))
     return centroids
@@ -792,7 +753,6 @@ def knn_ivf_indexed(
     nprobe: int = 4,
     query_id_col: str = "vec_id",
     id_type: str = "long",
-    assign_impl: str = "pandas",
 ) -> DataFrame:
     """Probe a persisted IVF index (see :func:`set_ivf`): queries
     explode to their ``nprobe`` nearest lists and join the
@@ -817,8 +777,7 @@ def knn_ivf_indexed(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     ).withColumn(
-        "__list", F.explode(_nearest_impl("__qv", centroids, nprobe,
-                                          assign_impl))
+        "__list", F.explode(_nearest_pandas("__qv", centroids, nprobe))
     ).withColumn("__qn", norm_units(F.col("__qv")))
     cand = q.join(c, "__list").select(
         "query_id", "neighbor_id",

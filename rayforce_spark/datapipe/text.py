@@ -25,23 +25,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def token_count_bpe_ish(text: Column) -> Column:
-    """BPE-ish subword proxy: count word pieces + digits + punctuation runs
-    (a deterministic stand-in for a real tokenizer's token count)."""
-    return F.size(
-        F.regexp_extract_all(
-            F.lower(text), F.lit(r"[a-z]{1,4}|[0-9]+|[^a-z0-9\s]"), F.lit(0)
-        )
-    )
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS[lang]])
-    n_stop = F.size(F.array_intersect(F.array_distinct(toks), sw))
-    return n_stop / F.greatest(F.size(F.array_distinct(toks)), F.lit(1))
-
-
 def language_id(text: Column) -> Column:
     """Stopword-overlap language heuristic: score each candidate language
     by distinct-stopword hits, return the argmax ('und' if no hits).
@@ -108,8 +91,7 @@ def ngrams(text: Column, n: int = 2) -> Column:
     whole-document regex split re-ran per output n-gram, O(doc_len²)
     per doc (measured r12: 5.7 s to build bigrams for 5,000 docs /
     271k tokens at sf0.1 vs 0.17 s for the token arrays themselves;
-    this spelling builds the same arrays in ~0.2 s). Same hazard class
-    as ``dedup._shingles_of_words``'s documented 10× slowdown.
+    this spelling builds the same arrays in ~0.2 s).
 
     zip_with pads the shorter side with nulls, which concat_ws skips —
     the final slice trims those padded tails, so docs shorter than n

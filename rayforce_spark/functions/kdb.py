@@ -378,9 +378,3 @@ def time_from_ms(ms: ColumnOrName) -> Column:
     with date_format."""
     return F.timestamp_millis(_col(ms).cast("long"))
 
-
-def null_if_sentinel(x: ColumnOrName, sentinel) -> Column:
-    """Ingest helper: map a reference typed-null sentinel (e.g. INT32_MIN,
-    ref core/rayforce.h:97-107) to SQL NULL."""
-    x = _col(x)
-    return F.when(x == sentinel, F.lit(None)).otherwise(x)

@@ -141,7 +141,9 @@ def rand_sample(df: DataFrame, n_or_frac, *, seed: int = 42) -> DataFrame:
     fit a driver/collect budget); for large exact-n samples use the
     fraction form with a small over-sample and a downstream limit."""
     if isinstance(n_or_frac, float):
-        return df.sample(n_or_frac, seed=seed)
+        # fraction= by keyword: PySpark's positional-fraction form,
+        # sample(0.1, seed=s), silently drops the seed keyword
+        return df.sample(fraction=n_or_frac, seed=seed)
     frac_df = df.sample(False, 1.0, seed=seed).orderBy(F.rand(seed))
     return frac_df.limit(int(n_or_frac))
 

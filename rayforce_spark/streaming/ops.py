@@ -340,12 +340,9 @@ def stream_minhash_index_ingest(
         )
         if not intra_batch:
             return cross
-        meta = _read_minhash_meta(spark, index_path)
         return cross.unionByName(minhash_lsh_pairs(
             batch_df, text_col, id_col, threshold=threshold,
-            num_perm=meta["num_perm"], bands=meta["bands"],
-            shingle_k=meta["shingle_k"], sig_impl=meta["sig_impl"],
-        ))
+            **_read_minhash_meta(spark, index_path)))
 
     return _index_ingest_foreachbatch(
         index_path, pairs_path, pairs_of,

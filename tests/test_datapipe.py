@@ -101,13 +101,6 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (1, 2) in got
     assert (1, 4) in got
     assert all(3 not in p for p in got)
-    # the dense-corpus candidate-width pin changes the plan, never the
-    # verified pair set
-    pinned = minhash_lsh_pairs(
-        df, "text", "doc_id", num_perm=64, bands=16, shingle_k=2,
-        threshold=0.5, cand_parallelism=4,
-    )
-    assert {(r.id_a, r.id_b) for r in pinned.collect()} == got
 
 
 def test_minhash_index_incremental_matches_full_run(tables, tmp_path, spark):
@@ -466,29 +459,61 @@ def test_index_format_version_gate(spark, tmp_path):
             probe_fn(path, docs, "text", "doc_id")
 
 
+def test_minhash_index_rejects_numpy_signed_meta(spark, tmp_path):
+    """An index signed by the removed numpy MinHash family carries the
+    same format (2) but buckets that never match expr-signed probes, so
+    it would silently return missing pairs. Its _meta (sig_impl="numpy",
+    as the old code wrote it) must make probe AND extend raise, naming
+    the path and the rebuild."""
+    import pytest as _pytest
+
+    from rayforce_spark.datapipe import (
+        extend_minhash_index, minhash_index_pairs, set_minhash_index)
+
+    docs = spark.createDataFrame(
+        [(1, "aa bb cc dd"), (2, "aa bb cc ee")],
+        "doc_id long, text string")
+    path = str(tmp_path / "minhash")
+    set_minhash_index(docs, path, "text", "doc_id")
+    spark.createDataFrame(
+        [(64, 16, 3, "numpy", 2)],
+        "num_perm int, bands int, shingle_k int, sig_impl string,"
+        " format int",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
+    new = spark.createDataFrame([(3, "aa bb cc ff")],
+                                "doc_id long, text string")
+    for call in (
+        lambda: minhash_index_pairs(path, new, "text", "doc_id"),
+        lambda: extend_minhash_index(new, path, "text", "doc_id"),
+    ):
+        with _pytest.raises(ValueError, match="set_minhash_index") as e:
+            call()
+        assert path in str(e.value) and "numpy" in str(e.value)
+
+
 def test_arrow_default_fails_fast_when_missing(spark, monkeypatch):
-    """key_impl/assign_impl default to the Arrow twins; with
-    pandas/pyarrow absent the failure must be a DRIVER-side ImportError
-    naming the zero-dependency fallback, not an opaque worker-side
-    stack trace mid-job (r10 verdict #3)."""
+    """LSH keys, IVF assignment and SimHash fingerprints run as Arrow
+    UDFs; with pyarrow absent, building each plan must fail with a
+    DRIVER-side ImportError, not an opaque worker-side stack trace
+    mid-job (r10 verdict #3)."""
     import sys
 
     import pytest as _pytest
 
-    from rayforce_spark.datapipe.similarity import (
-        _bucket_structs,
-        _nearest_impl,
-    )
+    from rayforce_spark.datapipe.dedup import simhash
+    from rayforce_spark.datapipe.similarity import knn_ivf, knn_lsh
 
+    vecs = spark.createDataFrame([(1, [0.5, -0.25])],
+                                 "vec_id long, embedding array<double>")
+    docs = spark.createDataFrame([(1, "aa bb")], "doc_id long, text string")
     monkeypatch.setitem(sys.modules, "pyarrow", None)
-    with _pytest.raises(ImportError, match="key_impl='expr'"):
-        _bucket_structs("__v", dim=4, planes=2, tables=1, seed=1)
-    with _pytest.raises(ImportError, match="assign_impl='expr'"):
-        _nearest_impl("__v", [[0.0, 0.0]], 1, "pandas")
-    # the named fallbacks still plan fine without Arrow
-    _bucket_structs("__v", dim=4, planes=2, tables=1, seed=1,
-                    key_impl="expr")
-    _nearest_impl("__v", [[0.0, 0.0]], 1, "expr")
+    with _pytest.raises(ImportError):
+        knn_lsh(vecs, vecs, "embedding", "vec_id", k=1, dim=2)
+    with _pytest.raises(ImportError):
+        knn_ivf(vecs, vecs, "embedding", "vec_id", k=1,
+                centroids=[[0.0, 0.0]], nprobe=1)
+    with _pytest.raises(ImportError):
+        simhash(docs, "text", "doc_id")
 
 
 def test_block_margin_high_dim_matches_expr(spark):
@@ -515,26 +540,11 @@ def test_block_margin_high_dim_matches_expr(spark):
     assert want and got == want
 
 
-def test_minhash_numpy_signature_same_pairs(spark, tables):
-    # the Arrow-vectorized signature family is interchangeable with the
-    # expression fold: at bands=num_perm both have exact recall, so the
-    # verified output is the same exact-Jaccard pair set
-    d = tables["documents"].limit(300)
-    kw = dict(num_perm=32, bands=32, shingle_k=3, threshold=0.5)
-    expr_pairs = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                  minhash_lsh_pairs(d, "text", "doc_id", sig_impl="expr",
-                                    **kw).collect()}
-    np_pairs = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                minhash_lsh_pairs(d, "text", "doc_id", sig_impl="numpy",
-                                  **kw).collect()}
-    assert expr_pairs == np_pairs
-
-
 def test_minhash_shared_shingles_same_pairs(spark, tables):
     # r13: a caller-provided checkpointed shingle frame (the shared-
     # subtree spelling q_dedup_minhash uses for its two pipelines) must
-    # reproduce the default recompute path's pair set exactly — for
-    # both sig impls, and through the dense-collapse branch
+    # reproduce the default recompute path's pair set exactly, also
+    # through the dense-collapse branch
     from rayforce_spark.datapipe.dedup import fanout, with_shingle_hashes
 
     d = tables["documents"].limit(300)
@@ -544,14 +554,12 @@ def test_minhash_shared_shingles_same_pairs(spark, tables):
             "__text", 3, "__bh")
           .select("__id", "__bh").localCheckpoint(eager=False))
     kw = dict(num_perm=32, bands=32, shingle_k=3, threshold=0.5)
-    for impl in ("expr", "numpy"):
-        want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-                minhash_lsh_pairs(d, "text", "doc_id", sig_impl=impl,
-                                  **kw).collect()}
-        got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
-               minhash_lsh_pairs(d, "text", "doc_id", sig_impl=impl,
-                                 shingles=sh, **kw).collect()}
-        assert want and got == want
+    want = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
+            minhash_lsh_pairs(d, "text", "doc_id", **kw).collect()}
+    got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
+           minhash_lsh_pairs(d, "text", "doc_id", shingles=sh,
+                             **kw).collect()}
+    assert want and got == want
     # dense-collapse branch consumes the shared frame too
     dense = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
              minhash_lsh_pairs(d, "text", "doc_id", dense_threshold=1,
@@ -563,12 +571,12 @@ def test_minhash_shared_shingles_same_pairs(spark, tables):
 
 
 def test_simhash_fp_numpy_bit_equal(spark, tables):
-    """The Arrow fingerprint twin (fp_impl='numpy', the default) must be
-    BIT-EQUAL to the 63-aggregate expression plan for both token-hash
-    families, including edge docs: empty/whitespace text yields one ''
-    token on both paths, null text is dropped on both (explode vs the
-    size()>0 filter)."""
-    from rayforce_spark.datapipe.dedup import simhash
+    """The Arrow fingerprint must be BIT-EQUAL to the 63-aggregate
+    expression fold (_simhash_expr) for both token-hash families,
+    including edge docs: empty/whitespace text yields one '' token on
+    both paths, null text is dropped on both (explode vs the size()>0
+    filter)."""
+    from rayforce_spark.datapipe.dedup import _simhash_expr, simhash
 
     docs = tables["documents"].limit(400).select("doc_id", "text")
     edge = spark.createDataFrame(
@@ -577,10 +585,10 @@ def test_simhash_fp_numpy_bit_equal(spark, tables):
         "doc_id long, text string")
     d = docs.unionByName(edge)
     for th in ("xxhash64", "md5"):
-        want = {r.doc_id: r.simhash for r in simhash(
-            d, "text", "doc_id", token_hash=th, fp_impl="expr").collect()}
+        want = {r.doc_id: r.simhash for r in _simhash_expr(
+            d, "text", "doc_id", token_hash=th).collect()}
         got = {r.doc_id: r.simhash for r in simhash(
-            d, "text", "doc_id", token_hash=th, fp_impl="numpy").collect()}
+            d, "text", "doc_id", token_hash=th).collect()}
         assert 9000004 not in got and len(got) == 404
         assert got == want
 
@@ -667,11 +675,25 @@ def test_knn_lsh_recall(tables):
     assert recall >= 0.6, f"LSH recall too low: {recall}"
 
 
+def _bucket_structs_expr(vec_name, *, dim, planes, tables, seed):
+    """The pure-expression spelling of similarity._bucket_structs: one
+    _bucket_key fold per table — the reference the Arrow keys are
+    pinned bit-equal against."""
+    from rayforce_spark.datapipe.similarity import _bucket_key, _hyperplanes
+
+    return F.array(*[
+        F.struct(F.lit(t).alias("tbl"),
+                 _bucket_key(vec_name, _hyperplanes(dim, planes, t, seed))
+                 .alias("key"))
+        for t in range(tables)
+    ])
+
+
 def test_lsh_bucket_keys_pandas_bit_equal(tables, spark):
-    """The Arrow bucket-key twin is BIT-identical to the JVM expression
-    path on every corpus vector (sequential-accumulation rounding
+    """The Arrow bucket keys are BIT-identical to the JVM expression
+    fold on every corpus vector (sequential-accumulation rounding
     argument in _bucket_keys_pandas' docstring; this is the empirical
-    pin), and keys degenerate inputs (null vector, wrong length) to 0
+    pin), and key degenerate inputs (null vector, wrong length) to 0
     exactly like the expression fold's null story."""
     from rayforce_spark.datapipe.similarity import _bucket_structs
 
@@ -679,8 +701,8 @@ def test_lsh_bucket_keys_pandas_bit_equal(tables, spark):
     kw = dict(dim=64, planes=5, tables=7, seed=123)
     both = emb.select(
         "vec_id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
+        _bucket_structs_expr("embedding", **kw).alias("e"),
+        _bucket_structs("embedding", **kw).alias("p"),
     ).collect()
     assert both
     for r in both:
@@ -691,8 +713,8 @@ def test_lsh_bucket_keys_pandas_bit_equal(tables, spark):
     )
     rows = weird.select(
         "id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
+        _bucket_structs_expr("embedding", **kw).alias("e"),
+        _bucket_structs("embedding", **kw).alias("p"),
     ).collect()
     for r in rows:
         assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
@@ -719,8 +741,8 @@ def test_lsh_bucket_keys_nan_bit_equal(spark):
     )
     rows = weird.select(
         "id",
-        _bucket_structs("embedding", key_impl="expr", **kw).alias("e"),
-        _bucket_structs("embedding", key_impl="pandas", **kw).alias("p"),
+        _bucket_structs_expr("embedding", **kw).alias("e"),
+        _bucket_structs("embedding", **kw).alias("p"),
     ).collect()
     for r in rows:
         assert [x.asDict() for x in r.e] == [x.asDict() for x in r.p]
@@ -757,7 +779,7 @@ def test_ivf_nearest_nan_bit_equal(spark):
     rows tie-break to ascending centroid index on both (Spark struct
     compare treats NaN == NaN then compares i; stable argsort keeps
     input order)."""
-    from rayforce_spark.datapipe.similarity import _nearest_impl
+    from rayforce_spark.datapipe.similarity import _nearest, _nearest_pandas
 
     nan = float("nan")
     # centroid 1 is itself NaN-poisoned: finite vectors get exactly one
@@ -770,8 +792,8 @@ def test_ivf_nearest_nan_bit_equal(spark):
         "id long, embedding array<double>")
     rows = weird.select(
         "id",
-        _nearest_impl("embedding", cents, 4, "expr").alias("e"),
-        _nearest_impl("embedding", cents, 4, "pandas").alias("p"),
+        _nearest("embedding", cents, 4).alias("e"),
+        _nearest_pandas("embedding", cents, 4).alias("p"),
     ).collect()
     for r in rows:
         assert list(r.e) == list(r.p)
@@ -786,22 +808,22 @@ def test_ivf_nearest_pandas_bit_equal(tables, spark):
     lexicographic order), and degenerate rows (null vector, wrong
     length) yield [0..nprobe-1] exactly like the expr path's all-null
     distance tie-break."""
-    from rayforce_spark.datapipe.similarity import _nearest_impl
+    from rayforce_spark.datapipe.similarity import _nearest, _nearest_pandas
 
     cents = [[0.01 * i + 0.001 * d for d in range(64)] for i in range(9)]
     emb = tables["embeddings"].select("vec_id", "embedding")
     rows = emb.select(
         "vec_id",
-        _nearest_impl("embedding", cents, 3, "expr").alias("e"),
-        _nearest_impl("embedding", cents, 3, "pandas").alias("p"),
+        _nearest("embedding", cents, 3).alias("e"),
+        _nearest_pandas("embedding", cents, 3).alias("p"),
     ).collect()
     assert rows and all(list(r.e) == list(r.p) for r in rows)
     weird = spark.createDataFrame(
         [(1, None), (2, [0.5, -0.25])],
         "id long, embedding array<double>")
     for r in weird.select(
-            _nearest_impl("embedding", cents, 3, "expr").alias("e"),
-            _nearest_impl("embedding", cents, 3, "pandas").alias("p"),
+            _nearest("embedding", cents, 3).alias("e"),
+            _nearest_pandas("embedding", cents, 3).alias("p"),
     ).collect():
         assert list(r.e) == list(r.p) == [0, 1, 2]
 

@@ -7,6 +7,7 @@ from rayforce_spark.operators.items import (
     at,
     enlist,
     meta,
+    rand_sample,
     raze,
     remove,
     reverse,
@@ -14,7 +15,9 @@ from rayforce_spark.operators.items import (
 )
 from rayforce_spark.operators.iterate import (
     apply_grouped,
+    apply_rows,
     fold_array,
+    map_,
     map_array,
     scan_array,
     scan_col,
@@ -91,6 +94,46 @@ def test_apply_grouped(tables, duck):
                   AS demeaned
            FROM lineitem""",
     )
+
+
+def test_map_and_apply_rows(tables, duck):
+    # map_: a scalar lambda over a table column stays an expression;
+    # apply_rows: a partition-streaming pandas lambda (mapInPandas)
+    li = tables["lineitem"]
+    out = li.select("l_orderkey", "l_linenumber",
+                    map_(lambda c: c * 2 + 1, "l_quantity").alias("q"))
+
+    def disc(batches):
+        for pdf in batches:
+            pdf["net"] = pdf["l_extendedprice"] * (1 - pdf["l_discount"])
+            yield pdf[["l_orderkey", "l_linenumber", "net"]]
+
+    rows = apply_rows(
+        li.select("l_orderkey", "l_linenumber", "l_extendedprice",
+                  "l_discount"),
+        disc, "l_orderkey long, l_linenumber int, net double")
+    assert_matches_duckdb(
+        out, duck,
+        "SELECT l_orderkey, l_linenumber, l_quantity * 2 + 1 AS q"
+        " FROM lineitem")
+    assert_matches_duckdb(
+        rows, duck,
+        "SELECT l_orderkey, l_linenumber,"
+        " l_extendedprice * (1 - l_discount) AS net FROM lineitem")
+
+
+def test_rand_sample(spark):
+    df = til(spark, 1000)
+    # int -> exactly n distinct input rows, reproducible per seed
+    a = [r.x for r in rand_sample(df, 25, seed=7).collect()]
+    b = [r.x for r in rand_sample(df, 25, seed=7).collect()]
+    assert len(a) == len(set(a)) == 25 and set(a) <= set(range(1000))
+    assert sorted(a) == sorted(b)
+    assert sorted(a) != list(range(25))  # shuffled, not the head
+    # float -> bernoulli fraction, same seed same rows
+    f1 = sorted(r.x for r in rand_sample(df, 0.1, seed=3).collect())
+    f2 = sorted(r.x for r in rand_sample(df, 0.1, seed=3).collect())
+    assert f1 == f2 and 40 <= len(f1) <= 160
 
 
 def test_apply_grouped_batched_equals_spark_impl(spark):

@@ -35,6 +35,25 @@ def test_approx_count_distinct_close_to_exact(tables):
         assert abs(r.approx - r.exact) <= max(3, 0.08 * r.exact), r
 
 
+def test_approx_quantile_close_to_exact(tables):
+    # percentile_approx sketch vs the exact sorted values per group: the
+    # answer is an observed value whose rank is within the sketch's
+    # 1/accuracy rank error of q*n
+    li = tables["lineitem"]
+    out = select(li, {"p90": A.approx_quantile("l_extendedprice", 0.9)},
+                 by="l_returnflag").collect()
+    vals = {}
+    for r in li.select("l_returnflag", "l_extendedprice").collect():
+        vals.setdefault(r.l_returnflag, []).append(r.l_extendedprice)
+    assert {r.l_returnflag for r in out} == set(vals)
+    for r in out:
+        v = sorted(vals[r.l_returnflag])
+        slack = len(v) // 10000 + 1
+        rank = int(0.9 * len(v))
+        lo, hi = max(rank - slack - 1, 0), min(rank + slack, len(v) - 1)
+        assert r.p90 in v and v[lo] <= r.p90 <= v[hi], (r, v[lo], v[hi])
+
+
 def test_groupby_multi_aggs(tables, duck):
     out = select(
         tables["lineitem"],
